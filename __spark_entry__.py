@@ -2631,20 +2631,26 @@ def _q_corpus_datacard(spark, sf_dir):
 _PQ_PARAMS = {"m": 2, "k": 16, "max_iter": 2}
 
 
-def _overlap(*thunks):
+def _overlap(spark, *thunks):
     """Run independent driver-blocking model trainings concurrently
     (r12 optimization, guide §2.6): each k-means/PQ fit is a chain of
     tiny k-row collect jobs whose wall is sequential driver
     round-trips, and the trainings passed here share no inputs — so
     overlapping them changes no computation (each thunk's jobs,
     seeds, and rounding are untouched) while the idle cores back-fill
-    between collect rounds. Returns the thunk results in order."""
+    between collect rounds. The pool threads inherit the caller's job
+    group and tags from ``spark``. Returns the thunk results in
+    order."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        # one wrap per thunk: each gets its own copy of the local
+        # properties, which Spark SQL writes execution ids into
+        futs = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futs]
 
 
@@ -2838,6 +2844,7 @@ def _q_ann_ivf_pq_topk(spark, sf_dir):
         for x in emb.where(F.col("vec_id") == 0).first()["embedding"]
     ]
     books, cents = _overlap(
+        spark,
         lambda: pq_train(emb, **_PQ_PARAMS),
         lambda: kmeans_fit(emb, k=8, max_iter=2),
     )
@@ -2890,6 +2897,7 @@ def _q_ann_pq_store_topk(spark, sf_dir):
         for x in emb.where(F.col("vec_id") == 0).first()["embedding"]
     ]
     books, cents = _overlap(
+        spark,
         lambda: pq_train(emb, **_PQ_PARAMS),
         lambda: kmeans_fit(emb, k=8, max_iter=2),
     )
@@ -3493,6 +3501,7 @@ def _q_ann_recall_ivf_pq(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     books, cents = _overlap(
+        spark,
         lambda: pq_train(emb, **_PQ_PARAMS),
         lambda: kmeans_fit(emb, k=8, max_iter=2),
     )
@@ -3518,6 +3527,7 @@ def _q_ann_recall_ivf_rpq(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, pq_books = _overlap(
+        spark,
         lambda: kmeans_fit(emb, k=8, max_iter=2),
         lambda: pq_train(emb, **_PQ_PARAMS),
     )
@@ -3542,6 +3552,7 @@ def _q_ann_recall_pq_rerank(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, books = _overlap(
+        spark,
         lambda: kmeans_fit(emb, k=8, max_iter=2),
         lambda: pq_train(emb, **_PQ_PARAMS),
     )
@@ -3564,6 +3575,7 @@ def _q_ann_recall_frontier(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, books = _overlap(
+        spark,
         lambda: kmeans_fit(emb, k=8, max_iter=2),
         lambda: pq_train(emb, **_PQ_PARAMS),
     )
@@ -3645,6 +3657,7 @@ def _q_ann_frontier_opq(spark, sf_dir):
     rot = opq_rotation(emb, m=_PQ_PARAMS["m"])
     remb = rotate_embeddings(emb, rot)
     cents, books, rcents, rbooks = _overlap(
+        spark,
         lambda: kmeans_fit(emb, k=8, max_iter=2),
         lambda: pq_train(emb, **_PQ_PARAMS),
         lambda: kmeans_fit(remb, k=8, max_iter=2),

@@ -16,8 +16,6 @@ reference are the key subtlety:
 from __future__ import annotations
 
 import re
-from functools import reduce
-from operator import or_
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -33,23 +31,12 @@ def norm(col: Column | str) -> Column:
     return F.lower(F.trim(F.coalesce(c.cast("string"), F.lit(""))))
 
 
-def contains_any(col: Column | str, keys: list[str]) -> Column:
-    """OR of substring containment over a key list (app.py:33-35)."""
-    n = norm(col)
-    return reduce(or_, [n.contains(k) for k in keys])
-
-
 def pandas_str(col: Column | str) -> Column:
     """pandas ``astype(str)`` semantics: NULL becomes the literal "nan"
     (app.py:110, 521). Everything else uses Spark's string cast, which
     matches pandas str() for ints ("1"), floats ("1.5"/"1.0") and strings.
     """
     return F.coalesce(_c(col).cast("string"), F.lit("nan"))
-
-
-def str_trim(col: Column | str) -> Column:
-    """``astype(str).str.strip()`` — stringify (NULL->"nan") then trim."""
-    return F.trim(pandas_str(col))
 
 
 def sel_predicate(col: Column | str) -> Column:

@@ -5,16 +5,51 @@ document — outputs are small aggregates by construction. We keep
 those driver-side sinks (with an explicit row cap guarding against
 misuse on raw tables) and add the scale path: one parquet directory
 per table via distributed ``df.write``.
+
+A bundle is a dozen small tables, and each table's collect or write
+is a few latency-bound Spark jobs that leave the cores idle. So the
+bundle sinks run every table's work at the same time, from a driver
+thread pool as wide as ``defaultParallelism`` (at most one thread per
+table); Spark's scheduler interleaves the jobs. What each table
+computes is unchanged, and so is the output: results come back in
+the input dict's order, so JSON key order and Excel sheet order are
+the dict order. Every table's call runs with its own copy of the
+caller's local properties and tags
+(``pyspark.inheritable_thread_target``), so its jobs report the
+caller's job group. Excel sheets are still written
+one after another: neither pandas' ``ExcelWriter`` nor ``minixlsx``
+is thread-safe.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 DEFAULT_ROW_CAP = 1_000_000
+
+
+def _per_table(tables: dict[str, DataFrame], work) -> dict:
+    """``{name: work(name, df)}`` for every table, in ``tables``' order,
+    with the calls running concurrently. If any call raises, the
+    exception of the first such table (in dict order) propagates."""
+    if not tables:
+        return {}
+    spark = next(iter(tables.values())).sparkSession
+    width = min(len(tables), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        # one wrap per call: a wrap copies the caller's local properties
+        # once, and Spark SQL writes each query's execution id into that
+        # copy, so concurrent calls must not share one
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(work), name, df)
+            for name, df in tables.items()
+        }
+        return {name: f.result() for name, f in futures.items()}
 
 
 def _capped_pandas(name: str, df: DataFrame, row_cap: int):
@@ -33,7 +68,11 @@ def write_excel_bundle(
     """Multi-sheet Excel workbook, sheet names truncated to Excel's
     31-char limit (app.py:596). Driver-side by design; uses pandas'
     excel engine when one is installed, else the stdlib fallback
-    (io/minixlsx.py)."""
+    (io/minixlsx.py). The tables are collected concurrently, then the
+    sheets are written serially in dict order."""
+    frames = _per_table(
+        tables, lambda name, df: _capped_pandas(name, df, row_cap)
+    )
     try:
         import pandas as pd
 
@@ -42,8 +81,7 @@ def write_excel_bundle(
         from bht_etl_app_spark.io.minixlsx import write_xlsx
 
         sheets = {}
-        for name, df in tables.items():
-            pdf = _capped_pandas(name, df, row_cap)
+        for name, pdf in frames.items():
             rows = [
                 [None if (isinstance(v, float) and v != v) else v for v in rec]
                 for rec in pdf.itertuples(index=False, name=None)
@@ -52,20 +90,19 @@ def write_excel_bundle(
         write_xlsx(path, sheets)
         return
     with writer:
-        for name, df in tables.items():
-            _capped_pandas(name, df, row_cap).to_excel(
-                writer, index=False, sheet_name=name[:31]
-            )
+        for name, pdf in frames.items():
+            pdf.to_excel(writer, index=False, sheet_name=name[:31])
 
 
 def write_json_bundle(
     tables: dict[str, DataFrame], path: str, row_cap: int = DEFAULT_ROW_CAP
 ) -> None:
-    """Single JSON document ``{name: [records...]}`` (app.py:607-615)."""
-    bundle = {
-        name: _capped_pandas(name, df, row_cap).to_dict(orient="records")
-        for name, df in tables.items()
-    }
+    """Single JSON document ``{name: [records...]}`` (app.py:607-615),
+    keys in dict order. The tables are collected concurrently."""
+    bundle = _per_table(
+        tables,
+        lambda name, df: _capped_pandas(name, df, row_cap).to_dict(orient="records"),
+    )
     with open(path, "w") as f:
         json.dump(bundle, f, indent=2, default=str)
 
@@ -75,9 +112,12 @@ def write_parquet_bundle(
 ) -> None:
     """Scale sink: one parquet directory per table, written
     distributed. The path a 100 TB pipeline actually uses; Excel/JSON
-    stay for the small preview tier."""
-    for name, df in tables.items():
-        df.write.mode(mode).parquet(os.path.join(out_dir, name))
+    stay for the small preview tier. The tables' writes run
+    concurrently."""
+    _per_table(
+        tables,
+        lambda name, df: df.write.mode(mode).parquet(os.path.join(out_dir, name)),
+    )
 
 
 def write_table(

@@ -254,7 +254,7 @@ def triangle_stats(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
+    from pyspark import StorageLevel, inheritable_thread_target
 
     # Materialize-or-recompute (r12 optimization): this operator runs
     # FOUR actions (triangles, nodes, edges, wedge power sum), and
@@ -309,29 +309,31 @@ def triangle_stats(
     # tail backfills with the trivial power-sum aggregate
     edges = e.count()
     nodes = deg.count()
+    # each action inherits the caller's job group and tags from its
+    # own copy of the local properties (Spark SQL writes into that copy)
+    spark = pairs.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
         # left-semi keeps every matched wedge row (one per CENTER
         # vertex — distinct centers are distinct triangles; semi join
         # preserves left multiplicity, it only collapses the build
         # side)
-        f_tri = pool.submit(
+        f_tri = pool.submit(inheritable_thread_target(spark)(
             cands.join(o.select("src", "dst"), ["src", "dst"], "left_semi").count
-        )
-        f_wedges = pool.submit(
+        ))
+        f_wedges = pool.submit(inheritable_thread_target(spark)(
             deg.agg(
                 F.sum(
                     F.col("deg").cast("decimal(38,0)")
                     * (F.col("deg") - 1).cast("decimal(38,0)")
                 ).alias("w2x")
             ).head
-        )
+        ))
         tri = f_tri.result()
         wedges_row = f_wedges.result()
     for cached in (o, deg, e):
         cached.unpersist()
     wedges = int(wedges_row["w2x"]) // 2 if wedges_row["w2x"] is not None else 0
     coeff = (3.0 * float(tri) / float(wedges)) if wedges > 0 else None
-    spark = pairs.sparkSession
     return spark.createDataFrame(
         [(nodes, edges, int(tri), wedges, coeff)],
         "n_nodes long, n_edges long, n_triangles long, n_wedges long,"

@@ -113,6 +113,8 @@ def pq_train(
     FIFO; correctness does not depend on ordering."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from .clustering import kmeans_fit
 
     dim = len(emb.select(vec_col).first()[0])
@@ -130,8 +132,12 @@ def pq_train(
 
     if m == 1:
         return [_fit(0)]
+    # each fit inherits the caller's job group and tags from its own
+    # copy of the local properties (Spark SQL writes into that copy)
+    spark = emb.sparkSession
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        return list(pool.map(_fit, range(m)))
+        futs = [pool.submit(inheritable_thread_target(spark)(_fit), s) for s in range(m)]
+        return [f.result() for f in futs]
 
 
 def pq_encode(

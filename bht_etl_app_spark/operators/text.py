@@ -2088,7 +2088,16 @@ def lang_nb_score(
     inference is one corpus scan + a (doc_id, lang) aggregate; the
     per-doc dot product is an ordered fold over bucket-sorted terms
     (the recall_vs_exact float-sum discipline) so the score is
-    parallelism-invariant and engine-portable."""
+    parallelism-invariant and engine-portable.
+
+    The model must be DENSE over ``classes``, as :func:`lang_nb_fit`
+    emits it: every class has exactly one prior row (``bucket = -1``)
+    and exactly one row in every bucket the model holds. Scoring reads
+    a bucket's K weights by position, so a missing, duplicated or
+    foreign class would silently shift weights onto the wrong class.
+    The check rides inside the model's own aggregates (no extra Spark
+    job): a sparse model fails the scoring query with a
+    ``lang_nb_score: model is not dense`` error."""
     from pyspark import StorageLevel
 
     if classes is None:
@@ -2108,12 +2117,20 @@ def lang_nb_score(
     # float-sum discipline).
     pri = model.where((F.col("bucket") == -1) & F.col("lang").isin(order))
     mb = model.where((F.col("bucket") >= 0) & F.col("lang").isin(order))
-    per_lang_arr = lambda frame: F.transform(  # noqa: E731
-        F.array_sort(F.collect_list(F.struct("lang", "llw"))),
-        lambda s: s["llw"],
-    )
-    mbp = mb.groupBy("bucket").agg(per_lang_arr(mb).alias("__ws__"))
-    prim = pri.agg(per_lang_arr(pri).alias("__lps__"))
+    dense = F.array(*[F.lit(c) for c in order])
+
+    def per_lang_arr():
+        ws = F.array_sort(F.collect_list(F.struct("lang", "llw")))
+        return F.when(
+            F.transform(ws, lambda s: s["lang"]) == dense,
+            F.transform(ws, lambda s: s["llw"]),
+        ).otherwise(F.raise_error(F.lit(
+            f"lang_nb_score: model is not dense over classes {order}"
+            " (each class needs one prior row and one row per bucket)"
+        )))
+
+    mbp = mb.groupBy("bucket").agg(per_lang_arr().alias("__ws__"))
+    prim = pri.agg(per_lang_arr().alias("__lps__"))
     if feats is None:
         feats = char_ngram_buckets(
             df, text_col, id_col, n, num_buckets, hash_fn
@@ -2137,18 +2154,16 @@ def lang_nb_score(
         )
         .crossJoin(F.broadcast(prim))
     )
-    best = F.greatest(
-        *[
-            F.struct(
-                F.bround(
-                    F.col("__lps__")[i] + F.col("__dots__")[i], 6
-                ).alias("sc"),
-                F.lit(-(i + 1)).cast("long").alias("ni"),
-                F.lit(c).alias("lang"),
-            )
-            for i, c in enumerate(order)
-        ]
-    )
+    cands = [
+        F.struct(
+            F.bround(F.col("__lps__")[i] + F.col("__dots__")[i], 6).alias("sc"),
+            F.lit(-(i + 1)).cast("long").alias("ni"),
+            F.lit(c).alias("lang"),
+        )
+        for i, c in enumerate(order)
+    ]
+    # greatest() takes two or more arguments; a single class wins outright
+    best = cands[0] if k == 1 else F.greatest(*cands)
     bestdf = dots.select("doc_id", best.alias("b"))
     # no ensure_min_parallelism here (r13): base is a pure id
     # projection feeding a join — no CPU-heavy per-row work follows,

@@ -61,20 +61,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one fixture parquet table (lazy scan; pushdown-friendly).
 
@@ -120,10 +106,6 @@ def _nano_timestamp_cols(path: str) -> list[str]:
         if str(t).startswith("timestamp[ns"):
             out.append(field.name)
     return out
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES):
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def _source_parallelism(plan) -> int | None:

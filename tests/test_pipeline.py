@@ -152,7 +152,100 @@ def test_json_bundle_row_cap(spark, survey_sdf, tmp_path):
     out = {"tab": survey_sdf}
     with pytest.raises(ValueError, match="row cap"):
         write_json_bundle(out, str(tmp_path / "x.json"), row_cap=2)
+    # the tables are collected concurrently; the error still names the
+    # oversized table when it is not the first one
+    out = {"first": survey_sdf.limit(1), "second": survey_sdf.limit(2), "tab": survey_sdf}
+    with pytest.raises(ValueError, match="table 'tab' exceeds"):
+        write_json_bundle(out, str(tmp_path / "x.json"), row_cap=2)
 
+
+def _bundle_tables(survey_sdf):
+    pipe = BhtPipeline(CFG)
+    tables = pipe.transform(survey_sdf, cache=False)
+    tables["crosstab_gender_age_group"] = pipe.crosstab(
+        survey_sdf, "gender", "age_group", percent="row"
+    )
+    return tables
+
+
+def test_json_bundle_byte_identical_to_serial_reference(spark, survey_sdf, tmp_path):
+    """The bundle sinks collect tables concurrently; the file must be
+    exactly what a one-table-at-a-time collect in dict order gives."""
+    tables = _bundle_tables(survey_sdf)
+    jp = str(tmp_path / "bundle.json")
+    write_json_bundle(tables, jp)
+    serial = {name: df.toPandas().to_dict("records") for name, df in tables.items()}
+    with open(jp) as f:
+        assert f.read() == json.dumps(serial, indent=2, default=str)
+
+
+def test_parquet_bundle_reads_back_every_table(spark, survey_sdf, tmp_path):
+    tables = _bundle_tables(survey_sdf)
+    pq = str(tmp_path / "pq")
+    write_parquet_bundle(tables, pq)
+    assert sorted(os.listdir(pq)) == sorted(tables)
+    for name, df in tables.items():
+        assert spark.read.parquet(os.path.join(pq, name)).count() == df.count(), name
+
+
+def test_excel_bundle_sheet_order_is_dict_order(spark, survey_sdf, tmp_path):
+    from bht_etl_app_spark.io import write_excel_bundle
+    from bht_etl_app_spark.io.minixlsx import read_xlsx
+
+    tables = _bundle_tables(survey_sdf)
+    names = sorted(tables, reverse=True)
+    out = str(tmp_path / "bundle.xlsx")
+    write_excel_bundle({n: tables[n] for n in names}, out)
+    assert list(read_xlsx(out)) == [n[:31] for n in names]
+
+
+def test_empty_bundle_writes_empty_object(spark, tmp_path):
+    jp = str(tmp_path / "empty.json")
+    write_json_bundle({}, jp)
+    with open(jp) as f:
+        assert f.read() == "{}"
+    write_parquet_bundle({}, str(tmp_path / "pq"))
+
+
+def test_sink_jobs_carry_the_callers_job_group(spark, survey_sdf, tmp_path):
+    """Jobs started from the sinks' pool threads report the job group
+    the calling thread set, and none of them runs untagged."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tables = _bundle_tables(survey_sdf)
+    untagged_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("bundle-sink-test", "bundle sinks under a caller's group")
+    try:
+        write_json_bundle(tables, str(tmp_path / "b.json"))
+        write_parquet_bundle(tables, str(tmp_path / "pq"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("bundle-sink-test")) >= 2 * len(tables)
+    # no new untagged job (the tracker may have evicted old ones)
+    assert set(tracker.getJobIdsForGroup(None)) <= untagged_before
+
+
+
+def test_concurrent_sink_calls_do_not_share_local_properties(spark):
+    """Spark SQL writes each query's execution id into the calling
+    thread's local properties, so every concurrent sink call needs its
+    own copy: a value one call sets must not leak into another."""
+    import time
+
+    from bht_etl_app_spark.io.sinks import _per_table
+
+    sc = spark.sparkContext
+
+    def work(name, _df):
+        sc.setLocalProperty("bundle.probe", name)
+        time.sleep(0.2)
+        return sc.getLocalProperty("bundle.probe")
+
+    names = [f"t{i}" for i in range(2 * sc.defaultParallelism)]
+    got = _per_table({n: spark.range(1) for n in names}, work)
+    assert got == {n: n for n in names}
+    assert sc.getLocalProperty("bundle.probe") is None
 
 def test_minixlsx_round_trip_no_spark(tmp_path):
     """Stdlib XLSX engine: typed cells survive a write/read cycle."""

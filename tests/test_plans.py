@@ -7,6 +7,8 @@
 - whole-stage codegen covers the aggregation pipelines
 """
 
+import functools
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -204,7 +206,10 @@ NESTED_LOOP_OK = {
 }
 
 
+@functools.cache
 def _plan(spark, name: str) -> str:
+    """Formatted plan of one contract query, built once per session:
+    the whole-contract sweeps below share every plan they both read."""
     df = entry_mod.queries()[name](spark, SF)
     qe = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

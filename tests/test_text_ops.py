@@ -871,3 +871,68 @@ def test_lang_nb_no_training_docs_is_deterministic(spark):
     )
     got = {r["doc_id"]: r["lang_nb"] for r in lang_nb_classify(docs).collect()}
     assert got == {1: "en", 2: "en"}
+
+
+def _nb_docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "the cat and the dog", "en"),
+            (2, "el perro y el gato", "es"),
+            (3, "the park with the ball", "en"),
+            (4, "", "en"),
+        ],
+        "doc_id long, text string, lab string",
+    )
+
+
+def test_lang_nb_score_single_class_model(spark):
+    """A one-class model scores every gram-yielding doc as that class,
+    with the log posterior hand-computed from the model rows (prior +
+    sum cnt * llw, 6 dp half-even); a doc without grams stays
+    ('und', NULL). greatest() would reject a single argument."""
+    from decimal import ROUND_HALF_EVEN, Decimal
+
+    from pyspark.sql import functions as F
+
+    from bht_etl_app_spark.operators.text import (
+        char_ngram_buckets,
+        lang_nb_fit,
+        lang_nb_score,
+    )
+
+    docs = _nb_docs(spark)
+    model = lang_nb_fit(docs, F.col("lab"), num_buckets=16, classes=["en"])
+    got = {
+        r["doc_id"]: (r["lang_nb"], r["nb_logscore"])
+        for r in lang_nb_score(docs, model, num_buckets=16, classes=["en"]).collect()
+    }
+    llw = {r["bucket"]: r["llw"] for r in model.collect()}
+    feats = char_ngram_buckets(docs, num_buckets=16).collect()
+    for doc_id in (1, 2, 3):
+        score = llw[-1]
+        for r in sorted((r for r in feats if r["doc_id"] == doc_id), key=lambda r: r["bucket"]):
+            score += r["cnt"] * llw[r["bucket"]]
+        want = float(Decimal(repr(score)).quantize(Decimal("1e-6"), ROUND_HALF_EVEN))
+        assert got[doc_id][0] == "en"
+        assert got[doc_id][1] == pytest.approx(want, abs=1e-9)
+    assert got[4] == ("und", None)
+
+
+def test_lang_nb_score_rejects_sparse_model(spark):
+    """A model missing one (class, bucket) row would shift the later
+    classes' weights by position; scoring raises a named error."""
+    from pyspark.sql import functions as F
+
+    from bht_etl_app_spark.operators.text import lang_nb_fit, lang_nb_score
+
+    docs = _nb_docs(spark)
+    classes = ["en", "es"]
+    model = lang_nb_fit(docs, F.col("lab"), num_buckets=16, classes=classes)
+    sparse = model.where(~((F.col("lang") == "en") & (F.col("bucket") == 3)))
+    with pytest.raises(Exception, match="lang_nb_score: model is not dense"):
+        lang_nb_score(docs, sparse, num_buckets=16, classes=classes).collect()
+    no_prior = model.where(~((F.col("lang") == "es") & (F.col("bucket") == -1)))
+    with pytest.raises(Exception, match="lang_nb_score: model is not dense"):
+        lang_nb_score(docs, no_prior, num_buckets=16, classes=classes).collect()
+    # the dense model itself scores without error
+    assert lang_nb_score(docs, model, num_buckets=16, classes=classes).count() == 4
