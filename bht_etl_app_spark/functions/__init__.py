@@ -5,7 +5,6 @@ from bht_etl_app_spark.functions.exprs import (
     non_empty,
     to_double,
     weight_expr,
-    distinct_non_empty,
     codebook_recode_expr,
     extract_brand_from_column,
     brands_from_binary_columns,
@@ -18,7 +17,6 @@ __all__ = [
     "non_empty",
     "to_double",
     "weight_expr",
-    "distinct_non_empty",
     "codebook_recode_expr",
     "extract_brand_from_column",
     "brands_from_binary_columns",

@@ -77,27 +77,13 @@ def weight_expr(df, weight_col: str | None) -> Column:
     return F.lit(1.0)
 
 
-def distinct_non_empty(df, col: str):
-    """Distinct non-empty trimmed values, sorted (app.py:464-468):
-    ``dropna -> astype(str) -> strip -> drop empty -> unique -> sorted``."""
-    t = F.trim(F.col(col).cast("string"))
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(t.alias(col))
-        .where(F.col(col) != "")
-        .distinct()
-        .orderBy(col)
-    )
-
-
 def codebook_recode_expr(col: str, mapping: dict[str, str]) -> Column:
     """Codebook recode of one column (app.py:221-227):
     ``astype(str).map(value->label).fillna(original)`` — look up the
     *stringified* cell; on a miss fall back to the original value.
 
-    Implemented as a literal map lookup (JVM-side, codegen-friendly).
-    For large codebooks use a broadcast join instead
-    (operators.recode.apply_codebook).
+    Implemented as a literal map lookup (JVM-side, codegen-friendly);
+    ``io.readers.apply_codebook`` builds one per mapped column.
     """
     if not mapping:
         return _c(col)

@@ -87,79 +87,30 @@ def read_codebook(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def apply_codebook(
-    df: DataFrame,
-    codebook: DataFrame,
-    strategy: str = "auto",
-    max_map_entries: int = 10_000,
-) -> DataFrame:
+def apply_codebook(df: DataFrame, codebook: DataFrame) -> DataFrame:
     """Recode every matching column per the codebook (app.py:221-227):
     look up the stringified cell, fall back to the original value.
 
-    Two physical strategies (VERDICT r1 item #7):
-
-    - ``"map"`` (default for small codebooks): ONE pass — every mapped
-      column becomes a literal-map lookup expression
-      (``functions.exprs.codebook_recode_expr``) in a single
-      projection. No joins at all, so a survey with hundreds of mapped
-      columns doesn't accrete hundreds of join operators in the plan.
-    - ``"join"``: one broadcast left join per mapped column — for
-      codebooks too large to inline as literals (the expression tree
-      itself would bloat the plan). Still no shuffle of the fact table.
-
-    ``"auto"`` picks ``map`` when the codebook has at most
-    ``max_map_entries`` rows (survey codebooks always do), else
-    ``join``.
+    ONE pass: every mapped column becomes a literal-map lookup
+    expression (``functions.exprs.codebook_recode_expr``) in a single
+    projection. No joins at all, so a survey with hundreds of mapped
+    columns doesn't accrete hundreds of join operators in the plan.
+    The codebook itself is collected to the driver, so it must fit
+    there (survey codebooks are a few thousand rows at most).
     """
-    if strategy not in ("auto", "map", "join"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = "map" if codebook.limit(max_map_entries + 1).count() <= max_map_entries else "join"
+    from bht_etl_app_spark.functions.exprs import codebook_recode_expr
 
-    if strategy == "map":
-        from bht_etl_app_spark.functions.exprs import codebook_recode_expr
-
-        mappings: dict[str, dict[str, str]] = {}
-        for r in codebook.collect():
-            mappings.setdefault(r["column"], {})[r["value"]] = r["label"]
-        return df.select(
-            *[
-                codebook_recode_expr(c, mappings[c]).alias(c)
-                if c in mappings
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-
-    mapped_cols = [
-        r["column"] for r in codebook.select("column").distinct().collect()
-    ]
-    out = df
-    for colname in mapped_cols:
-        if colname not in df.columns:
-            continue
-        sub = (
-            codebook.where(F.col("column") == colname)
-            .select(
-                F.col("value").alias(f"__cb_value_{colname}"),
-                F.col("label").alias(f"__cb_label_{colname}"),
-            )
-        )
-        out = (
-            out.join(
-                F.broadcast(sub),
-                out[colname].cast("string") == F.col(f"__cb_value_{colname}"),
-                "left",
-            )
-            .withColumn(
-                colname,
-                F.coalesce(
-                    F.col(f"__cb_label_{colname}"), out[colname].cast("string")
-                ),
-            )
-            .drop(f"__cb_value_{colname}", f"__cb_label_{colname}")
-        )
-    return out
+    mappings: dict[str, dict[str, str]] = {}
+    for r in codebook.collect():
+        mappings.setdefault(r["column"], {})[r["value"]] = r["label"]
+    return df.select(
+        *[
+            codebook_recode_expr(c, mappings[c]).alias(c)
+            if c in mappings
+            else F.col(c)
+            for c in df.columns
+        ]
+    )
 
 
 def read_binary_files(

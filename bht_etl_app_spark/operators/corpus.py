@@ -1804,7 +1804,6 @@ def curate_corpus(
     redact: bool = False,
     redact_classes: tuple[str, ...] | None = None,
     extract_markup: bool = False,
-    persist_scrubbed: bool = False,
     url_col: str | None = None,
     url_blocklist: list[str] | DataFrame | None = None,
     semantic_emb: DataFrame | None = None,
@@ -1857,10 +1856,6 @@ def curate_corpus(
     earlier stages emit). Scale posture: the scrub adds two
     fp-keyed corpus-scale exchanges over the survivor set (documented
     on the operator) — no pair joins, nothing quadratic.
-    ``persist_scrubbed=True`` additionally persists the id+scrubbed
-    text boundary so the scrub chain evaluates once instead of twice
-    (keep-list + decontamination) — an opt-in exception to the
-    no-text-persists discipline, priced in PERFORMANCE.md r9.
 
     ``lm_ref`` enables the CCNet stage (Wenzek et al., LREC 2020) in
     CCNet's own position — after dedup, with the quality gates: a
@@ -1878,13 +1873,10 @@ def curate_corpus(
     vocabulary-bounded model tables plus a per-row threshold — no new
     corpus-scale shuffle enters the chain.
     """
-    from pyspark import StorageLevel
-
     from bht_etl_app_spark.functions.lifecycle import (
         carry,
         persistent_rdd_ids,
         track_checkpoint_rdds,
-        track_persisted,
     )
     from bht_etl_app_spark.operators.dedup import (
         dedup_clusters,
@@ -2035,7 +2027,6 @@ def curate_corpus(
     # the keep list alone would GC-unpersist them mid-use (the
     # attribute-dropping hazard documented in ngram_lm).
     lm_scores = None
-    extra_cached: list[DataFrame] = []
     if lm_ref is not None:
         from bht_etl_app_spark.operators.ngram_lm import kn_doc_logprob
 
@@ -2074,19 +2065,12 @@ def curate_corpus(
         # decontamination stage), so its plan evaluates twice under
         # the default no-text-persists discipline (the operator's own
         # persisted grams frame bounds the recompute to the probe +
-        # gaps-and-islands half). ``persist_scrubbed=True`` opts into
-        # an id+text boundary (MEMORY_AND_DISK) so the scrub runs
-        # once — MEASURED on the full chain at sf0.1/10x/30x
-        # (PERFORMANCE.md r9): the boundary wins ~16% at 1x but
-        # LOSES 10-17% at 10x/30x — corpus-sized text blocks spill
-        # and their write+read outprices the grams-bounded recompute
-        # — so False stays the default; the knob exists for chains
-        # whose scrub stage dominates (k near the gram floor, hot
-        # cache tiers).
+        # gaps-and-islands half). An id+text persist boundary that
+        # scrubs once was MEASURED on the full chain at sf0.1/10x/30x
+        # (PERFORMANCE.md r9): it wins ~16% at 1x but LOSES 10-17% at
+        # 10x/30x — corpus-sized text blocks spill and their
+        # write+read outprices the grams-bounded recompute.
         scr_txt = scr.select(id_col, "n_kept", "n_removed", "scrubbed_text")
-        if persist_scrubbed:
-            scr_txt = scr_txt.persist(StorageLevel.MEMORY_AND_DISK)
-            extra_cached.append(scr_txt)
         # keep = survivors with kept tokens OR untouched docs — the
         # n_removed == 0 arm distinguishes "was already empty" from
         # "scrubbed to nothing" (r8 ADVICE: under min_tokens=0 an
@@ -2156,13 +2140,11 @@ def curate_corpus(
         out = out.unionByName(leg)
     # Boundary checkpoint blocks are non-recomputable: registered for
     # explicit freeing (release(out) / sweep_checkpoints), never a GC
-    # finalizer — the dedup_clusters contract. Recomputable persisted
-    # frames (the opt-in scrubbed-text boundary) keep the finalizer
-    # contract; comp / lm_scores / scr stay carried for their own
-    # internal caches (the scrub's per-doc span cache is still read
-    # by the decontamination stage's plan).
+    # finalizer — the dedup_clusters contract. comp / lm_scores / scr
+    # stay carried for their own internal caches (the scrub's per-doc
+    # span cache is still read by the decontamination stage's plan).
     out = track_checkpoint_rdds(out, sc, _ckpt_ids)
-    out = carry(track_persisted(out, *extra_cached), comp)
+    out = carry(out, comp)
     if lm_scores is not None:
         out = carry(out, lm_scores)
     if scr is not None:

@@ -138,11 +138,6 @@ def frame_sample(
     return vids.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
 
 
-def frame_sample_stub(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Back-compat alias: the no-decoder form of :func:`frame_sample`."""
-    return frame_sample(media, every_n=every_n)
-
-
 def synth_media_from_documents(docs: DataFrame) -> DataFrame:
     """Build a deterministic MEDIA_SCHEMA frame from the documents
     fixture (text bytes as the opaque payload) so multimodal plumbing

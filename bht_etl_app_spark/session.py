@@ -108,84 +108,25 @@ def _nano_timestamp_cols(path: str) -> list[str]:
     return out
 
 
-def _source_parallelism(plan) -> int | None:
-    """Structural source-parallelism estimate over a (pre-preparation)
-    physical plan: how many splits feed this subtree. Joins follow the
-    streamed side (a broadcast build side contributes no partitions),
-    unions sum, everything else takes the max over children; file
-    scans answer exactly (``inputRDD`` is the split computation Spark
-    itself will run — metadata only, listing is session-cached).
-    Returns None for leaves it cannot price (local relations,
-    RDD-backed frames) — the caller falls back to the exact probe.
-    """
-    def walk(p, depth):
-        if depth > 256:
-            return None
-        name = p.getClass().getSimpleName()
-        if name == "FileSourceScanExec":
-            return p.inputRDD().getNumPartitions()
-        if name == "ShuffleExchangeExec":
-            # explicit repartition/repartitionByRange in the plan (the
-            # only exchanges present pre-preparation): its output
-            # partition count IS the frame's parallelism — walking
-            # through to the source would re-price an already-
-            # repartitioned frame by its scan splits and trigger a
-            # redundant second shuffle (r12 ADVICE, medium)
-            return p.outputPartitioning().numPartitions()
-        ch = p.children()
-        k = ch.size()
-        if k == 0:
-            # non-file leaves (InMemoryTableScanExec, BatchScanExec,
-            # LocalTableScanExec, RDD-backed): fall back to the exact
-            # probe — cached/local leaves are cheap to probe exactly
-            return None
-        if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
-            side = 1 if p.buildSide().toString() == "BuildLeft" else 0
-            return walk(ch.apply(side), depth + 1)
-        vals = []
-        for i in range(k):
-            v = walk(ch.apply(i), depth + 1)
-            if v is None:
-                return None
-            vals.append(v)
-        return sum(vals) if name == "UnionExec" else max(vals)
-
-    try:
-        return walk(plan, 0)
-    except Exception:
-        return None
-
-
-def ensure_min_parallelism(df, factor: int = 1):
-    """Repartition a narrow scan up to the session's parallelism before
+def ensure_min_parallelism(df):
+    """Repartition a narrow input up to the session's parallelism before
     a CPU-heavy projection (regex tokenization, shingling, hashing).
 
-    A small parquet table is often a single file -> a single input
-    split -> ONE core does all the expression work regardless of
-    cluster size. At real scale the scan already has >= cores splits
-    and this is a no-op (the check is driver-side metadata only), so
-    the extra shuffle is paid exactly when it is cheap: on inputs small
-    enough to fit in one split.
+    The rule: a frame read from files is priced by its file count
+    (``df.inputFiles()``, driver-side metadata, no Spark job); any
+    other frame (driver-local data, checkpoints) by its exact
+    partition count. Fewer than ``defaultParallelism`` means
+    one round-robin repartition to ``defaultParallelism``; otherwise
+    the frame comes back unchanged. A small parquet table is one file
+    and so one split, which would put all of the expression work on
+    one core; a dataset at scale is many files, and the guard is a
+    no-op.
 
-    The probe reads SOURCE parallelism off the pre-preparation
-    physical plan (r12 optimization): the previous ``df.rdd``
-    partition count looked exact but was anything but metadata-only —
-    under AQE, converting a shuffle-bearing frame to an RDD EXECUTES
-    its upstream query stages (and compiles every codegen stage), so
-    each call on a composed frame cost seconds of driver/cluster time
-    and the curation chain paid it per stage (measured ~10 s of the
-    curated_verdicts build at sf0.1). ``sparkPlan`` is planned but
-    not prepared — no exchanges yet, nothing executes — and the
-    walk bottoms out at the file-scan split counts, which is the
-    quantity this guard was documented to act on all along. Frames
-    whose leaves it cannot price (driver-local data, RDD-backed
-    boundaries) keep the exact probe — those plans are leaf-shaped,
-    so the probe is cheap exactly there.
+    Known limit: a dataset stored as fewer files than cores, each
+    holding many row groups, already has enough splits but still gets
+    one extra round-robin shuffle.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    est = _source_parallelism(df._jdf.queryExecution().sparkPlan())
-    n = est if est is not None else df.rdd.getNumPartitions()
-    if n < target:
-        return df.repartition(target)
-    return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    n = len(files) if files else df.rdd.getNumPartitions()
+    return df.repartition(target) if n < target else df

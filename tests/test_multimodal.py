@@ -7,7 +7,7 @@ from bht_etl_app_spark.operators import image_features, synth_media_from_documen
 from bht_etl_app_spark.operators.multimodal import (
     IMAGE_FEATURES_SCHEMA,
     fake_image_decode,
-    frame_sample_stub,
+    frame_sample,
 )
 
 
@@ -46,7 +46,7 @@ def test_image_features_repartition(media):
 
 def test_frame_sample_is_stub(spark, media):
     # schema is declared even though decode is stubbed
-    df = frame_sample_stub(media)
+    df = frame_sample(media)
     assert [f.name for f in df.schema.fields] == ["media_id", "frame_idx", "frame"]
 
 
