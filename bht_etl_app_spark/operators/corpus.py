@@ -33,10 +33,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bht_etl_app_spark.operators.text import (
+    DEFAULT_REDACT_CLASSES,
     LANG_PRIORITY,
+    extract_text_expr,
     lang_count_exprs,
     lang_scores_exprs,
     ngrams_expr,
+    redact_expr,
     repetition_signals,
     tokens_expr,
 )
@@ -1788,6 +1791,44 @@ def corpus_datacard(
     )
 
 
+def _pre_stages(
+    df: DataFrame,
+    text_col: str,
+    extract_markup: bool,
+    redact: bool,
+    redact_classes: tuple[str, ...] | None,
+) -> DataFrame:
+    """curate_corpus's optional per-row pre-stages, shared with the
+    streaming ingest so the batch and stream chains land the same text
+    byte for byte. Neither has a verdict leg: both transform, never
+    drop.
+
+    -1. markup/boilerplate extraction: the FIRST stage of every
+    web-crawl chain (CCNet/RefinedWeb/FineWeb start from HTML) —
+    script/style blocks out, tags stripped, entities decoded, thin
+    boilerplate lines dropped, whitespace collapsed, BEFORE redaction
+    sees the text (a tag-split URL would otherwise dodge the pattern)
+    and before anything tokenizes, fingerprints, or trains. The SAME
+    extract_text_expr kernel as the standalone doc_extracted_text key.
+
+    0. URL/email redaction: the standard pre-quality scrub (PII out
+    BEFORE anything tokenizes, fingerprints, or trains on the text).
+    redact_expr is the SAME kernel as the standalone scrub_text
+    operator, so the stage and the doc_scrubbed key can never diverge.
+    ``redact_classes`` widens the pattern set (e.g.
+    text.PII_REDACT_CLASSES adds IP + phone); None keeps the URL+email
+    default and an empty tuple redacts nothing.
+    """
+    if extract_markup:
+        df = df.withColumn(text_col, extract_text_expr(text_col))
+    if redact:
+        classes = (
+            DEFAULT_REDACT_CLASSES if redact_classes is None else redact_classes
+        )
+        df = df.withColumn(text_col, redact_expr(text_col, classes))
+    return df
+
+
 def curate_corpus(
     df: DataFrame,
     benchmark: DataFrame,
@@ -1945,41 +1986,7 @@ def curate_corpus(
             .select(ids, F.lit("url_dup").alias("verdict"))
         )
         df = df.join(url_keep_ids, id_col, "left_semi")
-    # -1. markup/boilerplate extraction (optional): the FIRST stage
-    # of every web-crawl chain (CCNet/RefinedWeb/FineWeb start from
-    # HTML) — script/style blocks out, tags stripped, entities
-    # decoded, thin boilerplate lines dropped, whitespace collapsed,
-    # BEFORE redaction sees the text (a tag-split URL would otherwise
-    # dodge the pattern) and before anything tokenizes, fingerprints,
-    # or trains. Pure per-row projection; the SAME extract_text_expr
-    # kernel as the standalone doc_extracted_text key, so the stage
-    # and the contract key can never diverge. No verdict leg:
-    # extraction transforms, it never drops.
-    if extract_markup:
-        from bht_etl_app_spark.operators.text import extract_text_expr
-
-        df = df.withColumn(text_col, extract_text_expr(text_col))
-    # 0. URL/email redaction (optional): the standard pre-quality
-    # scrub every real curation chain runs (PII/boilerplate out
-    # BEFORE anything tokenizes, fingerprints, or trains on the
-    # text). Pure per-row projection — redact_expr is the SAME
-    # kernel as the standalone scrub_text operator, so the stage and
-    # the doc_scrubbed contract key can never diverge; every
-    # downstream stage (quality, dedup fingerprints, LM, substr,
-    # decontamination) consumes the REDACTED text. No verdict leg:
-    # redaction transforms, it never drops.
-    if redact:
-        from bht_etl_app_spark.operators.text import redact_expr
-
-        # redact_classes widens the pattern set (e.g.
-        # text.PII_REDACT_CLASSES adds IP + phone); None keeps the
-        # kernel's URL+email default — same ONE kernel either way
-        if redact_classes is None:
-            df = df.withColumn(text_col, redact_expr(text_col))
-        else:
-            df = df.withColumn(
-                text_col, redact_expr(text_col, redact_classes)
-            )
+    df = _pre_stages(df, text_col, extract_markup, redact, redact_classes)
     # Stage boundaries are persisted: the verdict union has five legs
     # and each leg's lineage would otherwise re-run every upstream
     # stage (quality's gram aggregation ~5x, measured 28 s -> at

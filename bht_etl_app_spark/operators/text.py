@@ -1910,7 +1910,11 @@ def char_ngram_buckets(
 
     Scale posture: projection → explode → (doc_id, bucket) count with
     map-side combine; no corpus-wide state, shuffle rows bounded by
-    min(doc_len, B) per doc."""
+    min(doc_len, B) per doc. Memory is per row, not per corpus: at
+    peak one row holds about (2n+1)·len array elements (the char
+    array, n shifted slices, the n-wide zipped structs and the gram
+    array), so a single very long document is bounded by executor
+    memory; the length is not capped here."""
     if num_buckets & (num_buckets - 1):
         raise ValueError("num_buckets must be a power of two")
     from bht_etl_app_spark.operators.dedup import base_hash_expr

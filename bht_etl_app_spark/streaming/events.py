@@ -598,6 +598,7 @@ def ingest_curate_batch(
     configured with e.g. PII_REDACT_CLASSES has a byte-matching
     streaming configuration."""
     from bht_etl_app_spark.operators.corpus import (
+        _pre_stages,
         decontaminate,
         quality_filter_decisions,
     )
@@ -608,19 +609,9 @@ def ingest_curate_batch(
         near_dup_incremental,
     )
 
-    if extract_markup:
-        from bht_etl_app_spark.operators.text import extract_text_expr
-
-        batch_df = batch_df.withColumn("text", extract_text_expr("text"))
-    if redact:
-        from bht_etl_app_spark.operators.text import redact_expr
-
-        if redact_classes is None:
-            batch_df = batch_df.withColumn("text", redact_expr("text"))
-        else:
-            batch_df = batch_df.withColumn(
-                "text", redact_expr("text", redact_classes)
-            )
+    batch_df = _pre_stages(
+        batch_df, "text", extract_markup, redact, redact_classes
+    )
     spark = batch_df.sparkSession
     cols = list(batch_df.columns)
     jvm = spark._jvm

@@ -53,6 +53,42 @@ def test_local_frame_is_decided_by_partition_count(spark):
     assert ensure_min_parallelism(big) is big
 
 
+def test_few_files_with_many_splits_are_still_repartitioned(spark, tmp_path):
+    """The guard prices a file scan by file count, never by splits.
+    One file with many row groups already reads as enough splits, yet
+    is repartitioned: the documented known limit, pinned so a guard
+    that prices by ``df.rdd`` instead shows up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = spark.sparkContext.defaultParallelism
+    n_groups = 4 * target
+    rows = 2_000
+    path = tmp_path / "one_file"
+    path.mkdir()
+    ids = pa.array(range(n_groups * rows), pa.int64())
+    pq.write_table(
+        pa.table({"id": ids, "s": pa.array([f"{i:08x}" for i in range(len(ids))])}),
+        str(path / "part-0.parquet"),
+        row_group_size=rows,
+    )
+    size = (path / "part-0.parquet").stat().st_size
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(size // (2 * target)))
+    try:
+        df = spark.read.parquet(str(path))
+        assert len(df.inputFiles()) == 1
+        assert df.rdd.getNumPartitions() >= target
+        assert ensure_min_parallelism(df) is not df
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def test_no_jvm_plan_internals_in_package():
     """Engine logic must not depend on version-specific JVM classes:
     no py4j walks over plan nodes or query-execution internals."""

@@ -11,8 +11,8 @@ expectations computed in Python from the generator formula.
 
 The fixture is generated Spark-side (spark.range + column
 expressions), never driver-side: 1000 columns x 20k rows in the
-test; tools/wide_survey_scale.py runs the same shape at 10^6 rows
-for the PERFORMANCE.md scale note.
+test. The same shape at 10^6 rows is recorded in PERFORMANCE.md
+("Wide-survey scale").
 """
 
 import pytest

@@ -1,9 +1,11 @@
 """Dump ``explain("formatted")`` for named queries to plan files.
 
-Optimization-round evidence capture: for each query name, build the
-DataFrame via ``queries()`` and write its formatted physical plan to
-``plans/<tag>/<query>_<suffix>.txt`` (the judge checks plan claims in
-OPTIMIZATION_r*.md against these files).
+Plan evidence on demand: for each query name, build the DataFrame
+via ``queries()`` and write its formatted physical plan to
+``plans/<tag>/<query>_<suffix>.txt``, with its size and Exchange
+count on stdout. The dumps are regenerated, not committed
+(``/plans/`` is git-ignored); compare a before and an after dump to
+check a plan claim.
 
 Usage:
     python tools/explain_dump.py <tag> <suffix> <query> [query ...]

@@ -4,7 +4,7 @@ curation ingest with the persisted band index, survivor landing, PQ
 index build, and an ANN probe against the persisted index — at 1x
 (sf0.1) and 30x (/tmp/scale30, tools/make_scale_fixture.py) and
 record per-stage walls. The per-operator scale evidence already
-exists (scale_octave.py, scale_check.py); this closes the "would the
+exists (scale_octave.py, PERFORMANCE.md); this closes the "would the
 composed chain survive" question: stage boundaries are id-keyed
 semi/anti joins and parquet landings, so no stage should inherit a
 superlinear term from composition.
@@ -13,7 +13,7 @@ Production knobs: hash_fn="xxhash64" (the fast MinHash family — the
 md5 family exists for oracle replay, measured ~1.4x slower in r4);
 near-dup history probes ride the (band,bh)-bucketed persisted index.
 
-Fixture caveat (recorded in PERFORMANCE.md r4): the synthetic corpus
+Fixture caveat (PERFORMANCE.md "Method and fixture caveats"): the synthetic corpus
 has a ~31-word vocabulary, so permuted replicas are adversarially
 DENSE in shared shingles; near-dup stage output is governed by the
 original dup rate by construction (replicas are permuted, not
