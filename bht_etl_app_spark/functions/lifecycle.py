@@ -127,6 +127,21 @@ def persistent_rdd_ids(sc) -> set[int]:
     return {int(x) for x in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
+def _eager_checkpoint(
+    df: DataFrame, reliable: bool = False
+) -> tuple[DataFrame, set[int]]:
+    """Checkpoint ``df`` eagerly — ``localCheckpoint``, or the
+    reliable ``checkpoint`` into the context's checkpoint dir — and
+    return it with the ids of the JVM RDDs the checkpoint persisted,
+    so the caller can free exactly those blocks
+    (:func:`unpersist_rdd_ids`) or register them
+    (:func:`track_checkpoint_rdds`)."""
+    sc = df.sparkSession.sparkContext
+    before = persistent_rdd_ids(sc)
+    out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+    return out, persistent_rdd_ids(sc) - before
+
+
 def unpersist_rdd_ids(sc, ids) -> None:
     """Unpersist JVM RDDs by id (the only handle a checkpointed
     DataFrame exposes — its persisted RDD is internal to the plan).

@@ -136,14 +136,12 @@ def compact_band_index(
     the blocks freed after the rewrite.
     """
     from bht_etl_app_spark.functions.lifecycle import (
-        persistent_rdd_ids,
+        _eager_checkpoint,
         unpersist_rdd_ids,
     )
 
     sc = spark.sparkContext
-    before = persistent_rdd_ids(sc)
-    snap = spark.table(table).distinct().localCheckpoint(eager=True)
-    ids = persistent_rdd_ids(sc) - before
+    snap, ids = _eager_checkpoint(spark.table(table).distinct())
     try:
         n = snap.count()
         # pass `path` to keep an external table external at a NEW
@@ -272,26 +270,22 @@ def write_pq_index(
     (pinned in tests/test_layout.py). Codes are m small ints per
     vector, so the stored index is ~orders of magnitude smaller than
     the float vectors it replaces; the vectors themselves stay in
-    their own table for optional exact re-ranking."""
+    their own table for optional exact re-ranking.
+
+    ``mode="append"`` is the index-maintenance path: encode new
+    vectors with the EXISTING coarse centroids and codebooks
+    (``pq_index_rows`` with the stored model — no retrain, the
+    standard faiss ``add`` semantics; retraining is a separate, rarer
+    event). They land as new files inside their ``list_id=`` hive
+    partitions, so probe-time partition pruning keeps working across
+    appends. Each append adds one file per populated list — run
+    :func:`compact_pq_index` periodically (the ``append_band_index``
+    rule)."""
     codes.write.mode(mode).partitionBy("list_id").parquet(path)
 
 
 def read_pq_index(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def append_pq_index(codes: DataFrame, path: str) -> None:
-    """Append a new batch's ``(vec_id, list_id, codes)`` rows to the
-    stored IVF-PQ index — the production index-maintenance path: new
-    vectors are encoded with the EXISTING coarse centroids and
-    codebooks (``pq_index_rows`` with the stored model — no retrain,
-    the standard faiss ``add`` semantics; retraining is a separate,
-    rarer event) and land as new files inside their ``list_id=``
-    hive partitions, so probe-time partition pruning keeps working
-    unchanged across appends. Each append adds one file per populated
-    list — run :func:`compact_pq_index` periodically (the
-    ``append_band_index`` rule)."""
-    codes.write.mode("append").partitionBy("list_id").parquet(path)
 
 
 def compact_pq_index(spark: SparkSession, path: str) -> int:

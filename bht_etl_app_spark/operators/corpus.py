@@ -1915,8 +1915,8 @@ def curate_corpus(
     corpus-scale shuffle enters the chain.
     """
     from bht_etl_app_spark.functions.lifecycle import (
+        _eager_checkpoint,
         carry,
-        persistent_rdd_ids,
         track_checkpoint_rdds,
     )
     from bht_etl_app_spark.operators.dedup import (
@@ -1946,9 +1946,8 @@ def curate_corpus(
     _ckpt_ids: set[int] = set()
 
     def _boundary(frame: DataFrame) -> DataFrame:
-        before = persistent_rdd_ids(sc)
-        out = frame.localCheckpoint(eager=True)
-        _ckpt_ids.update(persistent_rdd_ids(sc) - before)
+        out, rdd_ids = _eager_checkpoint(frame)
+        _ckpt_ids.update(rdd_ids)
         return out
 
     ids = F.col(id_col)

@@ -1000,7 +1000,7 @@ def dedup_clusters(
     the blocks behind the caller's back (r4 ADVICE, medium).
     """
     from bht_etl_app_spark.functions.lifecycle import (
-        persistent_rdd_ids,
+        _eager_checkpoint,
         track_checkpoint_rdds,
         unpersist_rdd_ids,
     )
@@ -1014,13 +1014,7 @@ def dedup_clusters(
         # each round's blocks can be freed deterministically once the
         # next round is materialized (the ContextCleaner would get to
         # them only asynchronously — a leak for long sessions)
-        before = persistent_rdd_ids(sc)
-        out = (
-            df.checkpoint(eager=True)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=True)
-        )
-        return out, persistent_rdd_ids(sc) - before
+        return _eager_checkpoint(df, reliable=checkpoint_dir is not None)
 
     edges, edge_ids = _truncate(
         # duplicate edges are harmless under the min-aggregate, so no

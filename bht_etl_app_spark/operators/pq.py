@@ -74,6 +74,7 @@ __all__ = [
     "ann_ivf_rpq_topk",
     "rpq_knn_join",
     "ann_recall_report_rpq_vs_pq",
+    "ann_recall_frontier",
     "opq_rotation",
     "rotate_embeddings",
     "ann_recall_frontier_opq",
@@ -83,6 +84,57 @@ __all__ = [
 def _subvec(vec: Column, s: int, d_sub: int) -> Column:
     """Subspace slice s (0-based) of a vector column, 1-based slice."""
     return F.slice(vec, s * d_sub + 1, d_sub)
+
+
+def _codes_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
+    """The PQ code array every encoding path projects — the
+    :func:`pq_encode` rule as one column."""
+    from .clustering import _argmax_expr, _l2_scores_expr
+
+    d_sub = len(codebooks[0][0])
+    return F.array(*[
+        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), book))
+        for s, book in enumerate(codebooks)
+    ])
+
+
+def _sq_l2_expr(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two double arrays, folded
+    dimension-sequentially (the oracle's ``list_sum`` order)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, t: acc + t,
+    )
+
+
+def _lut_expr(qvec: Column, codebooks: list[list[list[float]]]) -> Column:
+    """Per-row flattened m x k ADC LUT, subspace-major — the
+    :func:`pq_adc_lut` layout as an array column, one
+    :func:`_sq_l2_expr` per codeword against the literal codebooks."""
+    from .similarity import lit_double_array
+
+    d_sub = len(codebooks[0][0])
+    return F.array(*[
+        _sq_l2_expr(
+            _subvec(qvec, s, d_sub), lit_double_array([float(x) for x in cw])
+        )
+        for s, book in enumerate(codebooks)
+        for cw in book
+    ])
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, q_id: str, dist_col: str, id_col: str
+) -> DataFrame:
+    """The batched joins' per-query top-k: ``rank`` by (dist, id) in
+    a ``q_id`` window, kept while ``rank <= k``."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(q_id).orderBy(F.asc(dist_col), F.asc(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def pq_train(
@@ -151,15 +203,7 @@ def pq_encode(
     argmin L2 via the dot - |c|^2/2 trick against the literal
     codebook, ties to the lowest index (the k-means assignment rule,
     so encode == assign under the fitted codebook)."""
-    from .clustering import _argmax_expr, _l2_scores_expr
-
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
+    codes = _codes_expr(F.col(vec_col), codebooks)
     return ensure_min_parallelism(emb).select(
         F.col(id_col), codes.alias("codes")
     )
@@ -222,6 +266,54 @@ def _adc_dist_expr(codes, lut, n_codewords: int, base=None):
     return F.aggregate(contribs, F.lit(0.0), lambda a, b: a + b)
 
 
+def _adc_topk(
+    frame: DataFrame,
+    codes: Column,
+    query_vecs: list[list[float]],
+    codebooks: list[list[list[float]]],
+    k: int,
+    id_col: str,
+    slot: Column | None = None,
+) -> DataFrame:
+    """The single-query ADC tail: ``codes`` score against one flat
+    literal of each ``query_vecs`` entry's :func:`pq_adc_lut` (one LUT
+    per probed list on the residual path, picked per row by ``slot``);
+    the k smallest ``(vec_id, adc_dist)`` by (dist, id), 6 dp, via
+    ``orderBy().limit()`` -> ``TakeOrderedAndProject``."""
+    from .similarity import lit_double_array
+
+    n_codewords = len(codebooks[0])
+    lut = lit_double_array(
+        [x for qv in query_vecs for x in pq_adc_lut(qv, codebooks)]
+    )
+    base = None if slot is None else slot * (len(codebooks) * n_codewords)
+    dist = _adc_dist_expr(codes, lut, n_codewords, base)
+    return (
+        frame.select(F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        .limit(k)
+    )
+
+
+def _adc_knn(
+    cand: DataFrame,
+    qside: DataFrame,
+    codebooks: list[list[list[float]]],
+    k: int,
+    q_id: str,
+    id_col: str,
+) -> DataFrame:
+    """The batched ADC tail: candidates ``(vec_id, __list__, codes)``
+    join the broadcast query side ``(q_id, __probe__, __lut__)`` on
+    their coarse list, score with ``m`` lookups into the row's own
+    LUT, and keep each query's top-k."""
+    dist = _adc_dist_expr(F.col("codes"), F.col("__lut__"), len(codebooks[0]))
+    scored = cand.join(
+        qside, cand["__list__"] == qside["__probe__"], "inner"
+    ).select(F.col(q_id), F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
+    return _rank_topk(scored, k, q_id, "adc_dist", id_col)
+
+
 def pq_topk(
     codes_df: DataFrame,
     query_vec: list[float],
@@ -236,18 +328,7 @@ def pq_topk(
     fold — no float vector math touches the corpus. The final top-k
     is ``orderBy().limit()`` -> ``TakeOrderedAndProject`` (plan-pinned
     with the other top-k queries)."""
-    from .similarity import lit_double_array
-
-    n_codewords = len(codebooks[0])
-    lut = lit_double_array(pq_adc_lut(query_vec, codebooks))
-    dist = _adc_dist_expr(F.col("codes"), lut, n_codewords)
-    return (
-        codes_df.select(
-            F.col(id_col), F.bround(dist, 6).alias("adc_dist")
-        )
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
-    )
+    return _adc_topk(codes_df, F.col("codes"), [query_vec], codebooks, k, id_col)
 
 
 def ann_ivf_pq_topk(
@@ -268,15 +349,9 @@ def ann_ivf_pq_topk(
     At scale the codes table is written partitioned by ``list_id`` so
     the probe prunes files before any scan; here list assignment is a
     projected column (no self-join), same as ``ann_ivf_topk``."""
-    from .similarity import _ivf_list_id, ivf_scores_expr, lit_double_array
+    from .similarity import _ivf_list_id, ivf_scores_expr
 
     probe_lists = _probe_lists(query_vec, coarse_centroids, nprobe)
-
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    n_codewords = len(codebooks[0])
-    from .clustering import _argmax_expr, _l2_scores_expr
-
     vec = F.col(vec_col)
     assigned = ensure_min_parallelism(emb).select(
         F.col(id_col),
@@ -284,17 +359,8 @@ def ann_ivf_pq_topk(
         ivf_scores_expr(vec, coarse_centroids).alias("__scores__"),
     ).withColumn("list_id", _ivf_list_id(F.col("__scores__")))
     probed = assigned.where(F.col("list_id").isin(probe_lists))
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
-    lut = lit_double_array(pq_adc_lut(query_vec, codebooks))
-    dist = _adc_dist_expr(codes, lut, n_codewords)
-    return (
-        probed.select(F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
-    )
+    codes = _codes_expr(vec, codebooks)
+    return _adc_topk(probed, codes, [query_vec], codebooks, k, id_col)
 
 
 def pq_index_rows(
@@ -308,16 +374,10 @@ def pq_index_rows(
     coarse IVF assignment (dot-product argmax, the IVF rule) plus PQ
     codes, one pure projection over the corpus. Feed to
     :func:`~bht_etl_app_spark.io.layout.write_pq_index`."""
-    from .clustering import _argmax_expr, _l2_scores_expr
     from .similarity import _ivf_list_id, ivf_scores_expr
 
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
     vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
+    codes = _codes_expr(vec, codebooks)
     return ensure_min_parallelism(emb).select(
         F.col(id_col),
         _ivf_list_id(ivf_scores_expr(vec, coarse_centroids)).alias("list_id"),
@@ -341,17 +401,10 @@ def ann_pq_index_topk(
     no corpus scan, no shuffle, no float math. Same results as
     :func:`ann_ivf_pq_topk` over the live frame (stored-vs-recomputed
     equality is what the shared oracle green proves)."""
-    from .similarity import lit_double_array
-
     probe_lists = _probe_lists(query_vec, coarse_centroids, nprobe)
-    n_codewords = len(codebooks[0])
-    lut = lit_double_array(pq_adc_lut(query_vec, codebooks))
-    dist = _adc_dist_expr(F.col("codes"), lut, n_codewords)
-    return (
-        index.where(F.col("list_id").isin(probe_lists))
-        .select(F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
+    return _adc_topk(
+        index.where(F.col("list_id").isin(probe_lists)),
+        F.col("codes"), [query_vec], codebooks, k, id_col,
     )
 
 
@@ -412,45 +465,20 @@ def pq_knn_join(
     fixture-sized 8). Every float fold is dimension-sequential and
     distances round to 6 dp before the (dist, id) ordering — the
     family's engine-exactness discipline."""
-    from .clustering import _argmax_expr, _l2_scores_expr
-    from .similarity import ivf_scores_expr, lit_double_array
+    from .similarity import _ivf_list_id, ivf_scores_expr
 
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    n_codewords = len(codebooks[0])
-    from pyspark.sql.window import Window
-
-    qvec = F.col(vec_col).cast("array<double>")
-    # flattened m x k LUT, subspace-major — the pq_adc_lut layout;
-    # each entry folds (q_i - c_i)^2 in dimension order
-    lut_entries = []
-    for s in range(m):
-        sub = _subvec(qvec, s, d_sub)
-        for c in range(n_codewords):
-            cw = lit_double_array([float(x) for x in codebooks[s][c]])
-            lut_entries.append(
-                F.aggregate(
-                    F.zip_with(sub, cw, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
+    lut = _lut_expr(F.col(vec_col).cast("array<double>"), codebooks)
     probes = _probes_expr(F.col(vec_col), coarse_centroids, nprobe)
     qside = F.broadcast(
         queries.select(
             F.col(q_id),
-            F.array(*lut_entries).alias("__lut__"),
+            lut.alias("__lut__"),
             F.explode(probes).alias("__probe__"),
         )
     )
 
     vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
-    from .similarity import _ivf_list_id
-
+    codes = _codes_expr(vec, codebooks)
     cand = ensure_min_parallelism(emb).select(
         F.col(id_col),
         _ivf_list_id(ivf_scores_expr(vec, coarse_centroids))
@@ -458,14 +486,24 @@ def pq_knn_join(
         .alias("__list__"),
         codes.alias("codes"),
     )
-    dist = _adc_dist_expr(F.col("codes"), F.col("__lut__"), n_codewords)
-    scored = cand.join(
-        qside, cand["__list__"] == qside["__probe__"], "inner"
-    ).select(F.col(q_id), F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    return _adc_knn(cand, qside, codebooks, k, q_id, id_col)
+
+
+def _l2_sides(
+    queries: DataFrame, corpus: DataFrame, q_id: str, c_id: str, vec_col: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The exact squared-L2 scoring sides, vectors as array<double> —
+    broadcast ``(q_id, __qv__)`` and ``(c_id, __cv__)`` — and the
+    distance between them once joined."""
+    qd = F.broadcast(
+        queries.select(
+            F.col(q_id), F.col(vec_col).cast("array<double>").alias("__qv__")
+        )
     )
+    cd = corpus.select(
+        F.col(c_id), F.col(vec_col).cast("array<double>").alias("__cv__")
+    )
+    return qd, cd, _sq_l2_expr(F.col("__qv__"), F.col("__cv__"))
 
 
 def l2_knn_join(
@@ -483,28 +521,11 @@ def l2_knn_join(
     shape), distances fold dimension-sequentially and round to 6 dp
     before the per-query (dist, id) rank window. Output
     ``(q_id, vec_id, l2_dist, rank)``."""
-    from pyspark.sql.window import Window
-
-    qd = F.broadcast(
-        queries.select(
-            F.col(q_id), F.col(vec_col).cast("array<double>").alias("__qv__")
-        )
-    )
-    cd = corpus.select(
-        F.col(c_id), F.col(vec_col).cast("array<double>").alias("__cv__")
-    )
-    dist = F.aggregate(
-        F.zip_with(F.col("__qv__"), F.col("__cv__"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    qd, cd, dist = _l2_sides(queries, corpus, q_id, c_id, vec_col)
     scored = cd.join(qd).select(
         F.col(q_id), F.col(c_id), F.bround(dist, 6).alias("l2_dist")
     )
-    w = Window.partitionBy(q_id).orderBy(F.asc("l2_dist"), F.asc(c_id))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, q_id, "l2_dist", c_id)
 
 
 def pq_rerank_topk(
@@ -534,34 +555,15 @@ def pq_rerank_topk(
     (the pq_topk rule) BEFORE the shortlist cut; exact distances fold
     dimension-sequentially and round 6 dp (the l2_knn_join rule)
     before the final (l2_dist, vec_id) order."""
-    from .clustering import _argmax_expr, _l2_scores_expr
     from .similarity import lit_double_array
 
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    n_codewords = len(codebooks[0])
-    vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
-    lut = lit_double_array(pq_adc_lut(query_vec, codebooks))
-    adc = _adc_dist_expr(codes, lut, n_codewords)
-    short = (
-        ensure_min_parallelism(emb)
-        .select(F.col(id_col), F.bround(adc, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(shortlist)
+    codes = _codes_expr(F.col(vec_col), codebooks)
+    short = _adc_topk(
+        ensure_min_parallelism(emb), codes, [query_vec], codebooks,
+        shortlist, id_col,
     )
-    qv = lit_double_array(query_vec)
-    exact = F.aggregate(
-        F.zip_with(
-            qv,
-            F.col(vec_col).cast("array<double>"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    exact = _sq_l2_expr(
+        lit_double_array(query_vec), F.col(vec_col).cast("array<double>")
     )
     return (
         emb.join(F.broadcast(short), id_col, "inner")
@@ -594,11 +596,9 @@ def ann_recall_report_pq(
     report (:func:`~bht_etl_app_spark.operators.similarity.
     recall_vs_exact`). One row: ``(n_queries, k, avg_recall,
     min_recall)``."""
-    from .similarity import recall_vs_exact
+    from .similarity import _query_sample, recall_vs_exact
 
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
+    q = _query_sample(emb, n_queries, id_col, vec_col)
     exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col)
     approx = pq_knn_join(
         q, emb, coarse_centroids, codebooks, k=k, nprobe=nprobe,
@@ -633,38 +633,66 @@ def rerank_knn_join(
     candidates pruned by the coarse probe never enter the shortlist,
     so the nprobe dial is unchanged (the FAISS IndexRefineFlat
     contract)."""
-    from pyspark.sql.window import Window
-
     short = pq_knn_join(
         queries, emb, coarse_centroids, codebooks, k=shortlist,
         nprobe=nprobe, q_id=q_id, id_col=id_col, vec_col=vec_col,
     )
-    qd = F.broadcast(
-        queries.select(
-            F.col(q_id), F.col(vec_col).cast("array<double>").alias("__qv__")
-        )
-    )
-    cd = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv__")
-    )
+    qd, cd, dist = _l2_sides(queries, emb, q_id, id_col, vec_col)
     fetched = cd.join(
         F.broadcast(short.select(q_id, id_col, "adc_dist")), id_col, "inner"
-    )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("__qv__"), F.col("__cv__"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     scored = fetched.join(qd, q_id).select(
         F.col(q_id), F.col(id_col), "adc_dist",
         F.bround(dist, 6).alias("l2_dist"),
     )
-    w = Window.partitionBy(q_id).orderBy(F.asc("l2_dist"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    return _rank_topk(scored, k, q_id, "l2_dist", id_col)
+
+
+def _sample_and_exact(
+    emb: DataFrame, n_queries: int, k: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The recall reports' query sample and their shared exact
+    squared-L2 top-k over it, persisted: it anchors every arm's
+    recall join and is n_queries x k rows, id-keyed (report-sized,
+    never corpus-sized)."""
+    from pyspark import StorageLevel
+
+    from .similarity import _query_sample
+
+    q = _query_sample(emb, n_queries, id_col, vec_col)
+    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    return q, exact
+
+
+def _recall_vs_pq(
+    exact: DataFrame,
+    pq_approx: DataFrame,
+    other: DataFrame,
+    other_name: str,
+    k: int,
+    id_col: str,
+    lits: tuple[tuple[str, int], ...] = (),
+) -> DataFrame:
+    """Classic IVF-PQ's recall beside ``other``'s against the persisted
+    ``exact``, one row: ``(n_queries, k, *lits, avg/min_recall_pq,
+    avg/min_recall_<other_name>)`` via the whitelisted one-row
+    crossJoin."""
+    from ..functions.lifecycle import track_persisted
+    from .similarity import recall_vs_exact
+
+    rep_pq = recall_vs_exact(exact, pq_approx, k, id_col=id_col).select(
+        "n_queries", "k",
+        *[F.lit(v).cast("long").alias(name) for name, v in lits],
+        F.col("avg_recall").alias("avg_recall_pq"),
+        F.col("min_recall").alias("min_recall_pq"),
+    )
+    rep_other = recall_vs_exact(exact, other, k, id_col=id_col).select(
+        F.col("avg_recall").alias(f"avg_recall_{other_name}"),
+        F.col("min_recall").alias(f"min_recall_{other_name}"),
+    )
+    return track_persisted(rep_pq.crossJoin(rep_other), exact)
 
 
 def ann_recall_report_pq_rerank(
@@ -694,17 +722,7 @@ def ann_recall_report_pq_rerank(
     similarity.recall_vs_exact`, the exact baseline persists
     (report-sized), and the one-row crossJoin is the whitelisted
     report-assembly shape."""
-    from pyspark import StorageLevel
-
-    from ..functions.lifecycle import track_persisted
-    from .similarity import recall_vs_exact
-
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
-    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    q, exact = _sample_and_exact(emb, n_queries, k, id_col, vec_col)
     pq_approx = pq_knn_join(
         q, emb, coarse_centroids, codebooks, k=k, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col,
@@ -713,17 +731,10 @@ def ann_recall_report_pq_rerank(
         q, emb, coarse_centroids, codebooks, k=k, shortlist=shortlist,
         nprobe=nprobe, id_col=id_col, vec_col=vec_col,
     )
-    rep_pq = recall_vs_exact(exact, pq_approx, k, id_col=id_col).select(
-        "n_queries", "k",
-        F.lit(shortlist).cast("long").alias("shortlist"),
-        F.col("avg_recall").alias("avg_recall_pq"),
-        F.col("min_recall").alias("min_recall_pq"),
+    return _recall_vs_pq(
+        exact, pq_approx, rr_approx, "rerank", k, id_col,
+        lits=(("shortlist", shortlist),),
     )
-    rep_rr = recall_vs_exact(exact, rr_approx, k, id_col=id_col).select(
-        F.col("avg_recall").alias("avg_recall_rerank"),
-        F.col("min_recall").alias("min_recall_rerank"),
-    )
-    return track_persisted(rep_pq.crossJoin(rep_rr), exact)
 
 
 def ivf_residuals(
@@ -815,21 +826,11 @@ def ann_ivf_rpq_topk(
     only the per-slot LUT indexing — candidate cost stays ``m``
     ``element_at`` lookups + a sequential fold. Contract key
     ``ann_ivf_rpq_topk`` (oracle: __spark_entry__._ann_ivf_rpq_oracle_sql)."""
-    from .clustering import _argmax_expr, _l2_scores_expr
-    from .similarity import lit_double_array
-
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    n_codewords = len(codebooks[0])
     probe_lists = _probe_lists(query_vec, coarse_centroids, nprobe)
-    flat: list[float] = []
-    for l in probe_lists:
-        q_res = [
-            float(a) - float(b)
-            for a, b in zip(query_vec, coarse_centroids[l])
-        ]
-        flat.extend(pq_adc_lut(q_res, codebooks))
-    lut = lit_double_array(flat)
+    q_res = [
+        [float(a) - float(b) for a, b in zip(query_vec, coarse_centroids[l])]
+        for l in probe_lists
+    ]
     # dense slot for the probed list (unmatched -> NULL, but the
     # probe filter below guarantees a match)
     slot_expr = None
@@ -843,18 +844,9 @@ def ann_ivf_rpq_topk(
 
     res = ivf_residuals(emb, coarse_centroids, id_col, vec_col)
     probed = res.where(F.col("list_id").isin(probe_lists))
-    vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
-    dist = _adc_dist_expr(
-        codes, lut, n_codewords, base=slot_expr * (m * n_codewords)
-    )
-    return (
-        probed.select(F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(k)
+    codes = _codes_expr(F.col(vec_col), codebooks)
+    return _adc_topk(
+        probed, codes, q_res, codebooks, k, id_col, slot=slot_expr
     )
 
 
@@ -888,14 +880,7 @@ def rpq_knn_join(
     projection + broadcast-hash join; only probed candidates reach
     the per-query rank window). Distances fold dimension-sequentially
     and round to 6 dp before the (dist, id) ordering."""
-    from pyspark.sql.window import Window
-
-    from .clustering import _argmax_expr, _l2_scores_expr
-    from .similarity import lit_double_array, lit_double_matrix
-
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    n_codewords = len(codebooks[0])
+    from .similarity import lit_double_matrix
 
     probes = _probes_expr(F.col(vec_col), coarse_centroids, nprobe)
     qx = queries.select(
@@ -912,45 +897,19 @@ def rpq_knn_join(
         q_id, "__probe__",
         F.zip_with(F.col("__qv__"), cent, lambda a, b: a - b).alias("__qr__"),
     )
-    lut_entries = []
-    for s in range(m):
-        sub = _subvec(F.col("__qr__"), s, d_sub)
-        for c in range(n_codewords):
-            cw = lit_double_array([float(x) for x in codebooks[s][c]])
-            lut_entries.append(
-                F.aggregate(
-                    F.zip_with(sub, cw, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
+    lut = _lut_expr(F.col("__qr__"), codebooks)
     qside = F.broadcast(
-        qx.select(
-            F.col(q_id),
-            F.col("__probe__"),
-            F.array(*lut_entries).alias("__lut__"),
-        )
+        qx.select(F.col(q_id), F.col("__probe__"), lut.alias("__lut__"))
     )
 
     res = ivf_residuals(emb, coarse_centroids, id_col, vec_col)
-    vec = F.col(vec_col)
-    codes = F.array(*[
-        _argmax_expr(_l2_scores_expr(_subvec(vec, s, d_sub), codebooks[s]))
-        for s in range(m)
-    ])
+    codes = _codes_expr(F.col(vec_col), codebooks)
     cand = res.select(
         F.col(id_col),
         F.col("list_id").cast("int").alias("__list__"),
         codes.alias("codes"),
     )
-    dist = _adc_dist_expr(F.col("codes"), F.col("__lut__"), n_codewords)
-    scored = cand.join(
-        qside, cand["__list__"] == qside["__probe__"], "inner"
-    ).select(F.col(q_id), F.col(id_col), F.bround(dist, 6).alias("adc_dist"))
-    w = Window.partitionBy(q_id).orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _adc_knn(cand, qside, codebooks, k, q_id, id_col)
 
 
 def ann_recall_report_rpq_vs_pq(
@@ -980,17 +939,7 @@ def ann_recall_report_rpq_vs_pq(
     is k x n_queries rows, id-keyed (model-report-sized, never
     corpus-sized). The final one-row x one-row crossJoin is a 1-row
     broadcast — the whitelisted report-assembly shape."""
-    from pyspark import StorageLevel
-
-    from ..functions.lifecycle import track_persisted
-    from .similarity import recall_vs_exact
-
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
-    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    q, exact = _sample_and_exact(emb, n_queries, k, id_col, vec_col)
     pq_approx = pq_knn_join(
         q, emb, coarse_centroids, pq_codebooks, k=k, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col,
@@ -999,16 +948,97 @@ def ann_recall_report_rpq_vs_pq(
         q, emb, coarse_centroids, rpq_codebooks, k=k, nprobe=nprobe,
         id_col=id_col, vec_col=vec_col,
     )
-    rep_pq = recall_vs_exact(exact, pq_approx, k, id_col=id_col).select(
-        "n_queries", "k",
-        F.col("avg_recall").alias("avg_recall_pq"),
-        F.col("min_recall").alias("min_recall_pq"),
+    return _recall_vs_pq(exact, pq_approx, rpq_approx, "rpq", k, id_col)
+
+
+def _coarse_id_bytes(n_lists: int) -> int:
+    """Stored byte width of a coarse list id: 1 byte up to 256 lists,
+    2 up to 65536, else 4."""
+    return 1 if n_lists <= 256 else (2 if n_lists <= 65536 else 4)
+
+
+def _list_sizes(
+    corpus: DataFrame, cents: list[list[float]], vec_col: str
+) -> DataFrame:
+    """Inverted-list sizes ``(__list__, __lsz__)`` under
+    :func:`pq_knn_join`'s plain-dot assignment, computed once and
+    persisted — at most ``len(cents)`` rows, read by every probe
+    count's :func:`_avg_scanned` and the corpus total."""
+    from pyspark import StorageLevel
+
+    from .similarity import _ivf_list_id, ivf_scores_expr
+
+    return (
+        corpus.select(
+            _ivf_list_id(ivf_scores_expr(F.col(vec_col), cents))
+            .cast("int")
+            .alias("__list__")
+        )
+        .groupBy("__list__")
+        .agg(F.count(F.lit(1)).cast("long").alias("__lsz__"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    rep_rpq = recall_vs_exact(exact, rpq_approx, k, id_col=id_col).select(
-        F.col("avg_recall").alias("avg_recall_rpq"),
-        F.col("min_recall").alias("min_recall_rpq"),
+
+
+def _avg_scanned(
+    queries: DataFrame,
+    cents: list[list[float]],
+    lsz: DataFrame,
+    nprobe: int,
+    vec_col: str,
+) -> DataFrame:
+    """One row ``(avg_scanned)``: the mean over queries of candidates
+    in the ``nprobe`` probed lists (the :func:`_probes_expr` ranking
+    the batched joins run; empty probed lists count 0)."""
+    probes = queries.select(
+        F.col("q_id"),
+        F.explode(_probes_expr(F.col(vec_col), cents, nprobe)).alias(
+            "__probe__"
+        ),
     )
-    return track_persisted(rep_pq.crossJoin(rep_rpq), exact)
+    per_q = (
+        probes.join(
+            F.broadcast(lsz),
+            probes["__probe__"] == lsz["__list__"],
+            "left",
+        )
+        .groupBy("q_id")
+        .agg(F.sum(F.coalesce(F.col("__lsz__"), F.lit(0))).alias("__s__"))
+    )
+    return per_q.agg(
+        F.bround(F.avg(F.col("__s__").cast("double")), 6).alias("avg_scanned")
+    )
+
+
+def _frontier_rows(
+    exact: DataFrame,
+    arms: list[tuple[str, int, int | None, DataFrame, DataFrame]],
+    k: int,
+    id_col: str,
+) -> DataFrame:
+    """The frontier table: one row per ``(config, bytes_per_vec,
+    nprobe, approx, scanned)`` arm — its recall against ``exact``
+    beside its one-row ``avg_scanned`` frame, unioned. ``nprobe`` is
+    NULL for arms without a probe dial."""
+    from functools import reduce
+
+    from .similarity import recall_vs_exact
+
+    rows = [
+        recall_vs_exact(exact, approx, k, id_col=id_col)
+        .crossJoin(F.broadcast(scanned))
+        .select(
+            F.lit(cfg).alias("config"),
+            F.lit(int(nbytes)).cast("long").alias("bytes_per_vec"),
+            (
+                F.lit(int(np_)) if np_ is not None else F.lit(None)
+            ).cast("long").alias("nprobe"),
+            "avg_scanned",
+            "n_queries", "k", "avg_recall", "min_recall",
+        )
+        for cfg, nbytes, np_, approx, scanned in arms
+    ]
+    return reduce(lambda a, b: a.unionByName(b), rows)
 
 
 def ann_recall_frontier(
@@ -1062,64 +1092,16 @@ def ann_recall_frontier(
     verified q_id-ordered
     :func:`~bht_etl_app_spark.operators.similarity.recall_vs_exact`.
     The union is report-rows only."""
-    from functools import reduce
-
-    from pyspark import StorageLevel
-
     from ..functions.lifecycle import track_persisted
-    from .similarity import _ivf_list_id, ivf_scores_expr, recall_vs_exact
 
     m = len(pq_codebooks)
-    nc = len(coarse_centroids)
-    coarse_id_bytes = 1 if nc <= 256 else (2 if nc <= 65536 else 4)
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
-    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # inverted-list sizes under pq_knn_join's plain-dot assignment —
-    # computed once (<= len(coarse_centroids) rows), feeds every
-    # nprobe's avg_scanned and the trunc rows' corpus total
-    lsz = (
-        emb.select(
-            _ivf_list_id(ivf_scores_expr(F.col(vec_col), coarse_centroids))
-            .cast("int")
-            .alias("__list__")
-        )
-        .groupBy("__list__")
-        .agg(F.count(F.lit(1)).cast("long").alias("__lsz__"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    q, exact = _sample_and_exact(emb, n_queries, k, id_col, vec_col)
+    lsz = _list_sizes(emb, coarse_centroids, vec_col)
     corpus_n = lsz.agg(
         F.sum("__lsz__").cast("double").alias("avg_scanned")
     )
 
-    def _avg_scanned(np_: int):
-        probes = q.select(
-            F.col("q_id"),
-            F.explode(
-                _probes_expr(F.col(vec_col), coarse_centroids, np_)
-            ).alias("__probe__"),
-        )
-        per_q = (
-            probes.join(
-                F.broadcast(lsz),
-                probes["__probe__"] == lsz["__list__"],
-                "left",
-            )
-            .groupBy("q_id")
-            .agg(
-                F.sum(F.coalesce(F.col("__lsz__"), F.lit(0))).alias("__s__")
-            )
-        )
-        return per_q.agg(
-            F.bround(F.avg(F.col("__s__").cast("double")), 6).alias(
-                "avg_scanned"
-            )
-        )
-
-    arms: list[tuple[str, int, int | None, DataFrame]] = []
+    arms: list[tuple[str, int, int | None, DataFrame, DataFrame]] = []
     for kd in keep_dims_list:
         qt = q.withColumn(vec_col, F.slice(F.col(vec_col), 1, kd))
         embt = emb.select(
@@ -1128,49 +1110,28 @@ def ann_recall_frontier(
         arms.append((
             f"trunc_d{kd}", kd * 4, None,
             l2_knn_join(qt, embt, k=k, c_id=id_col, vec_col=vec_col),
+            corpus_n,
         ))
-    pq_bytes = m + coarse_id_bytes
-    scanned_by_np = {np_: _avg_scanned(np_) for np_ in nprobes}
+    pq_bytes = m + _coarse_id_bytes(len(coarse_centroids))
+    scanned_by_np = {
+        np_: _avg_scanned(q, coarse_centroids, lsz, np_, vec_col)
+        for np_ in nprobes
+    }
     for np_ in nprobes:
-        arms.append((
-            f"ivf_pq_m{m}", pq_bytes, np_,
-            pq_knn_join(
-                q, emb, coarse_centroids, pq_codebooks, k=k, nprobe=np_,
-                id_col=id_col, vec_col=vec_col,
-            ),
-        ))
-        arms.append((
-            f"ivf_rpq_m{m}", pq_bytes, np_,
-            rpq_knn_join(
-                q, emb, coarse_centroids, rpq_codebooks, k=k, nprobe=np_,
-                id_col=id_col, vec_col=vec_col,
-            ),
-        ))
-        arms.append((
-            f"ivf_pq_m{m}_rerank{shortlist}", pq_bytes, np_,
-            rerank_knn_join(
-                q, emb, coarse_centroids, pq_codebooks, k=k,
-                shortlist=shortlist, nprobe=np_, id_col=id_col,
-                vec_col=vec_col,
-            ),
-        ))
-    rows = [
-        recall_vs_exact(exact, approx, k, id_col=id_col)
-        .crossJoin(
-            F.broadcast(corpus_n if np_ is None else scanned_by_np[np_])
-        )
-        .select(
-            F.lit(cfg).alias("config"),
-            F.lit(int(nbytes)).cast("long").alias("bytes_per_vec"),
-            (
-                F.lit(int(np_)) if np_ is not None else F.lit(None)
-            ).cast("long").alias("nprobe"),
-            "avg_scanned",
-            "n_queries", "k", "avg_recall", "min_recall",
-        )
-        for cfg, nbytes, np_, approx in arms
-    ]
-    out = reduce(lambda a, b: a.unionByName(b), rows)
+        dials = dict(k=k, nprobe=np_, id_col=id_col, vec_col=vec_col)
+        for cfg, approx in (
+            (f"ivf_pq_m{m}",
+             pq_knn_join(q, emb, coarse_centroids, pq_codebooks, **dials)),
+            (f"ivf_rpq_m{m}",
+             rpq_knn_join(q, emb, coarse_centroids, rpq_codebooks, **dials)),
+            (f"ivf_pq_m{m}_rerank{shortlist}",
+             rerank_knn_join(
+                 q, emb, coarse_centroids, pq_codebooks,
+                 shortlist=shortlist, **dials,
+             )),
+        ):
+            arms.append((cfg, pq_bytes, np_, approx, scanned_by_np[np_]))
+    out = _frontier_rows(exact, arms, k, id_col)
     return track_persisted(out, exact, lsz)
 
 
@@ -1317,101 +1278,37 @@ def ann_recall_frontier_opq(
     the verified batched no-corpus-shuffle join, ``avg_scanned``
     reuses the probed-list-size pricing per SPACE (the rotated
     coarse quantizer induces its own lists)."""
-    from functools import reduce
-
     from pyspark import StorageLevel
 
     from ..functions.lifecycle import track_persisted
-    from .similarity import _ivf_list_id, ivf_scores_expr, recall_vs_exact
+    from .similarity import _query_sample
 
     m = len(pq_codebooks)
-    nc = len(coarse_centroids)
-    coarse_id_bytes = 1 if nc <= 256 else (2 if nc <= 65536 else 4)
-    pq_bytes = m + coarse_id_bytes
+    pq_bytes = m + _coarse_id_bytes(len(coarse_centroids))
     # the rotated store feeds the list-size pass + every opq arm's
     # corpus side — persist it (the materialization the rotated index
     # would be at scale) rather than re-projecting per arm
     rot_emb = rot_emb.persist(StorageLevel.MEMORY_AND_DISK)
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
+    q, exact = _sample_and_exact(emb, n_queries, k, id_col, vec_col)
+    rq = _query_sample(rot_emb, n_queries, id_col, vec_col)
+    lsz_o = _list_sizes(emb, coarse_centroids, vec_col)
+    lsz_r = _list_sizes(rot_emb, rot_coarse_centroids, vec_col)
+    spaces = (
+        (f"ivf_pq_m{m}", q, emb, coarse_centroids, pq_codebooks, lsz_o),
+        (f"ivf_opq_m{m}", rq, rot_emb, rot_coarse_centroids,
+         rot_pq_codebooks, lsz_r),
     )
-    rq = rot_emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
-    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    def _lsz(corpus: DataFrame, cents: list[list[float]]) -> DataFrame:
-        return (
-            corpus.select(
-                _ivf_list_id(ivf_scores_expr(F.col(vec_col), cents))
-                .cast("int")
-                .alias("__list__")
-            )
-            .groupBy("__list__")
-            .agg(F.count(F.lit(1)).cast("long").alias("__lsz__"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    def _avg_scanned(
-        queries: DataFrame, cents: list[list[float]], lsz: DataFrame,
-        np_: int,
-    ) -> DataFrame:
-        probes = queries.select(
-            F.col("q_id"),
-            F.explode(_probes_expr(F.col(vec_col), cents, np_)).alias(
-                "__probe__"
-            ),
-        )
-        per_q = (
-            probes.join(
-                F.broadcast(lsz),
-                probes["__probe__"] == lsz["__list__"],
-                "left",
-            )
-            .groupBy("q_id")
-            .agg(
-                F.sum(F.coalesce(F.col("__lsz__"), F.lit(0))).alias("__s__")
-            )
-        )
-        return per_q.agg(
-            F.bround(F.avg(F.col("__s__").cast("double")), 6).alias(
-                "avg_scanned"
-            )
-        )
-
-    lsz_o = _lsz(emb, coarse_centroids)
-    lsz_r = _lsz(rot_emb, rot_coarse_centroids)
-    arms: list[tuple[str, int, DataFrame, DataFrame]] = []
-    for np_ in nprobes:
-        arms.append((
-            f"ivf_pq_m{m}", np_,
+    arms = [
+        (
+            cfg, pq_bytes, np_,
             pq_knn_join(
-                q, emb, coarse_centroids, pq_codebooks, k=k, nprobe=np_,
-                id_col=id_col, vec_col=vec_col,
+                qs, corpus, cents, books, k=k, nprobe=np_, id_col=id_col,
+                vec_col=vec_col,
             ),
-            _avg_scanned(q, coarse_centroids, lsz_o, np_),
-        ))
-        arms.append((
-            f"ivf_opq_m{m}", np_,
-            pq_knn_join(
-                rq, rot_emb, rot_coarse_centroids, rot_pq_codebooks, k=k,
-                nprobe=np_, id_col=id_col, vec_col=vec_col,
-            ),
-            _avg_scanned(rq, rot_coarse_centroids, lsz_r, np_),
-        ))
-    rows = [
-        recall_vs_exact(exact, approx, k, id_col=id_col)
-        .crossJoin(F.broadcast(scanned))
-        .select(
-            F.lit(cfg).alias("config"),
-            F.lit(int(pq_bytes)).cast("long").alias("bytes_per_vec"),
-            F.lit(int(np_)).cast("long").alias("nprobe"),
-            "avg_scanned",
-            "n_queries", "k", "avg_recall", "min_recall",
+            _avg_scanned(qs, cents, lsz, np_, vec_col),
         )
-        for cfg, np_, approx, scanned in arms
+        for np_ in nprobes
+        for cfg, qs, corpus, cents, books, lsz in spaces
     ]
-    out = reduce(lambda a, b: a.unionByName(b), rows)
+    out = _frontier_rows(exact, arms, k, id_col)
     return track_persisted(out, exact, lsz_o, lsz_r, rot_emb)

@@ -250,27 +250,6 @@ def ann_lsh_topk(
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest
-    centroid (max dot product over the centroid list — centroids are
-    the caller's, e.g. a k-means fit or a deterministic sample). The
-    assignment is one narrow projection: each row scores against the
-    literal centroid matrix inside codegen; no shuffle, no Python.
-
-    Output: ``(vec_id, list_id)`` — the inverted-file lists. At scale
-    you'd write this partitioned by ``list_id`` so probes prune files.
-    """
-    scored = emb.select(
-        F.col(id_col), ivf_scores_expr(F.col(vec_col), centroids).alias("__scores__")
-    )
-    return scored.select(F.col(id_col), _ivf_list_id(F.col("__scores__")).alias("list_id"))
-
-
 def ivf_scores_expr(vec: Column, centroids: list[list[float]]) -> Column:
     """Per-centroid dot scores as one array column. Callers project
     this ONCE and derive the argmax from the materialized array —
@@ -594,6 +573,16 @@ def knn_label_vote(
     )
 
 
+def _query_sample(
+    emb: DataFrame, n_queries: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The recall harnesses' deterministic query sample: rows with
+    ``id < n_queries`` as ``(q_id, vec_col)``."""
+    return emb.where(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("q_id"), vec_col
+    )
+
+
 def ann_recall_report(
     emb: DataFrame,
     planes: list[list[float]],
@@ -617,9 +606,7 @@ def ann_recall_report(
     (the bm25 rule) so the report is bit-stable across engines and
     partitionings.
     """
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
+    q = _query_sample(emb, n_queries, id_col, vec_col)
     exact = knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col)
     approx = ann_knn_join(
         q, emb, planes, k=k, c_id=id_col, vec_col=vec_col,
@@ -691,17 +678,10 @@ def ann_recall_report_truncated_dim(
     report isolates DIMENSION loss with no quantization or index
     effects mixed in (contrast ann_recall_report_ivf_pq, which
     prices codebook loss at full dimensionality)."""
-    from pyspark import StorageLevel
-
     from ..functions.lifecycle import track_persisted
-    from .pq import l2_knn_join
+    from .pq import _sample_and_exact, l2_knn_join
 
-    q = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), vec_col
-    )
-    exact = l2_knn_join(q, emb, k=k, c_id=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    q, exact = _sample_and_exact(emb, n_queries, k, id_col, vec_col)
     qt = q.withColumn(vec_col, F.slice(F.col(vec_col), 1, keep_dims))
     embt = emb.select(
         F.col(id_col), F.slice(F.col(vec_col), 1, keep_dims).alias(vec_col)

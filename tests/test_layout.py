@@ -440,7 +440,6 @@ def test_pq_index_incremental_append_equals_single_build(spark, tmp_path):
     at once; a duplicate replayed append is healed by compaction
     (for the PQ index dedup is probe-correctness, not just cost)."""
     from bht_etl_app_spark.io.layout import (
-        append_pq_index,
         compact_pq_index,
         read_pq_index,
         write_pq_index,
@@ -464,7 +463,7 @@ def test_pq_index_incremental_append_equals_single_build(spark, tmp_path):
     incr_path = str(tmp_path / "incr")
     write_pq_index(pq_index_rows(emb, cents, books), full_path)
     write_pq_index(pq_index_rows(first, cents, books), incr_path)
-    append_pq_index(pq_index_rows(second, cents, books), incr_path)
+    write_pq_index(pq_index_rows(second, cents, books), incr_path, mode="append")
 
     def probe(path):
         return [
@@ -477,7 +476,7 @@ def test_pq_index_incremental_append_equals_single_build(spark, tmp_path):
     assert probe(incr_path) == probe(full_path)
 
     # replayed append -> duplicate rows; compaction restores the set
-    append_pq_index(pq_index_rows(second, cents, books), incr_path)
+    write_pq_index(pq_index_rows(second, cents, books), incr_path, mode="append")
     n = compact_pq_index(spark, incr_path)
     assert n == emb.count()
     assert probe(incr_path) == probe(full_path)
@@ -490,7 +489,6 @@ def test_compact_pq_index_leaves_no_stale_temp(spark, tmp_path):
     import os
 
     from bht_etl_app_spark.io.layout import (
-        append_pq_index,
         compact_pq_index,
         read_pq_index,
         write_pq_index,
@@ -504,7 +502,7 @@ def test_compact_pq_index_leaves_no_stale_temp(spark, tmp_path):
     path = str(tmp_path / "pqidx")
     rows = pq_index_rows(emb, cents, books)
     write_pq_index(rows, path)
-    append_pq_index(rows, path)  # duplicate append
+    write_pq_index(rows, path, mode="append")  # duplicate append
     n = compact_pq_index(spark, path)
     assert n == emb.count()
     assert read_pq_index(spark, path).count() == n

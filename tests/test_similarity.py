@@ -73,10 +73,20 @@ def test_ann_lsh_topk_contains_true_neighbors(emb):
 
 
 def test_ivf_assign_and_full_probe_equals_exact(spark, emb):
-    from bht_etl_app_spark.operators.similarity import ann_ivf_topk, ivf_assign
+    from bht_etl_app_spark.operators.similarity import (
+        _ivf_list_id,
+        ann_ivf_topk,
+        ivf_scores_expr,
+    )
 
     centroids = [[1.0, 0.0], [0.0, 1.0], [-1.0, -1.0]]
-    got = {r["vec_id"]: r["list_id"] for r in ivf_assign(emb, centroids).collect()}
+    assigned = emb.select(
+        "vec_id",
+        _ivf_list_id(ivf_scores_expr(F.col("embedding"), centroids)).alias(
+            "list_id"
+        ),
+    )
+    got = {r["vec_id"]: r["list_id"] for r in assigned.collect()}
     assert got[0] == 0   # [1,0] -> centroid 0
     assert got[2] == 1   # [0,1]-ish -> centroid 1
     # probing ALL lists degenerates to exact search
@@ -92,6 +102,25 @@ def test_ivf_assign_and_full_probe_equals_exact(spark, emb):
         for r in ann_ivf_topk(emb, [1.0, 0.0], centroids, k=5, nprobe=1).collect()
     }
     assert one <= {v for v, lid in got.items() if lid == 0}
+
+
+def test_pq_all_lists_every_public_function():
+    """``pq.__all__`` names exactly the module's public top-level
+    functions (``ann_recall_frontier`` was missing while its OPQ twin
+    was listed)."""
+    import inspect
+
+    from bht_etl_app_spark.operators import pq
+
+    public = {
+        name
+        for name, fn in vars(pq).items()
+        if inspect.isfunction(fn)
+        and fn.__module__ == pq.__name__
+        and not name.startswith("_")
+    }
+    assert set(pq.__all__) == public
+    assert len(pq.__all__) == len(set(pq.__all__))
 
 
 def test_ann_lsh_multiprobe_distance_two_reaches_bucket(spark):
